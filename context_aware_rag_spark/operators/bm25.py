@@ -82,6 +82,11 @@ def bm25_scores(
     summed over matching terms (dl/avgdl is computed as the exact
     integer product dl*n_docs divided by the exact integer sum_dl, so
     both engines divide the same two numbers).
+
+    Not lazy: the query side is collected eagerly at call time
+    (``_collect_query_side``, at most SMALL_QUERY_TERM_CAP + 1 rows), so
+    the query-side subtree runs even if the returned plan is never
+    used, and a streaming ``queries`` frame fails here.
     """
     words = _words(F.col(text_col))
     toks = docs.select(
@@ -236,6 +241,9 @@ def ql_scores(
     100 TB shape: the SAME single-scan tf/cf plan as bm25_scores (cf
     is a vocabulary-sized agg over the tf frame — no second corpus
     scan), broadcast query terms, one wide exchange (the tf agg).
+
+    Like :func:`bm25_scores`, the query side is collected eagerly at
+    call time, so a streaming ``queries`` frame fails here.
     """
     words = _words(F.col(text_col))
     toks = docs.select(

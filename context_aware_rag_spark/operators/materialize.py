@@ -119,9 +119,3 @@ def build_edges(
         )
     return edges.dropDuplicates(["src", "dst", "rel_type", "conv_id"])
 
-
-def triples_parity(triples: DataFrame) -> DataFrame:
-    """The parity artifact: distinct named triples (SURVEY.md §7 stage 5)."""
-    return triples.select(
-        "conv_id", "subj_name", "subj_type", "pred", "obj_name", "obj_type"
-    ).distinct()

@@ -78,6 +78,12 @@ def spread_for_cpu(
 
     Only safe for partition-independent downstream computation — all
     callers here are per-row transforms feeding exact aggregations.
+
+    Known trade-off: an input with enough partitions but skewed row
+    counts (say 256 partitions with most rows in one) keeps its skew —
+    the coalesce merges partitions, it does not move rows — so one fat
+    task can straggle the CPU-bound stage, where the old unconditional
+    repartition rebalanced it. Repartition such an input first.
     """
     n_parts = df.rdd.getNumPartitions()
     parallelism = df.sparkSession.sparkContext.defaultParallelism

@@ -13,10 +13,15 @@ catalog — same code path, different format string). A stage whose
 idempotent-MERGE property (neo4j_db.py:519-556) re-expressed as
 write-once atomic table swaps.
 
-Lineage: one row per (run, stage, partition) with input/output row
-counts and wall time, appended to ``workdir/_lineage/`` — the analog of
-the reference's graph_rag_metrics.json (rag_health.py:20-48), but
-per-partition so stragglers and skew are visible.
+Lineage: one row per (run, stage, write task) with the task's output
+row count and the stage's wall time — the analog of the reference's
+graph_rag_metrics.json (rag_health.py:20-48), but per write task so
+stragglers and skew are visible. The counts come from the written
+files' parquet footers, so the bookkeeping costs no Spark job beyond
+the stage write; the run's rows are appended to ``workdir/_lineage/``
+in one write when the run ends (also when a stage raised), next to
+``workdir/metrics_<run_id>.json``. Every workdir access goes through
+the Hadoop FileSystem API (``fsutil``), so URI workdirs resume too.
 """
 
 from __future__ import annotations
@@ -25,12 +30,12 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Callable, Dict, Optional
+from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
+from ..fsutil import fs_and_path
 from ..operators import canonicalize, chunking, extraction, linking, materialize, similarity
 
 
@@ -46,14 +51,53 @@ class PipelineResult:
     metrics: Dict[str, dict] = field(default_factory=dict)
 
 
+_LINEAGE_SCHEMA = (
+    "partition int, out_rows long, stage string, run_id string, wall_s double"
+)
+
+
+def _task_row_counts(spark: SparkSession, path: str) -> Dict[int, int]:
+    """Rows per write task of the parquet table at ``path``, read from the
+    data files' footers on the driver (no Spark job). The task id is the
+    ``NNNNN`` of Spark's ``part-NNNNN-<job>-cNNN`` file names; a task that
+    rolled over into several files is summed."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs, p = fs_and_path(spark, path)
+    counts: Dict[int, int] = {}
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if not (st.isFile() and name.startswith("part-")):
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+        )
+        try:
+            rows = reader.getRecordCount()
+        finally:
+            reader.close()
+        task = int(name.split("-")[1])
+        counts[task] = counts.get(task, 0) + rows
+    return counts
+
+
 class StageWriter:
-    """Checkpoint + lineage bookkeeping for one pipeline run."""
+    """Checkpoint + lineage bookkeeping for one pipeline run. Use it as a
+    context manager: on exit the run's lineage rows and metrics are
+    written (``close``), also when a stage raised."""
 
     def __init__(self, spark: SparkSession, workdir: Optional[str], run_id: str):
         self.spark = spark
         self.workdir = workdir
         self.run_id = run_id
         self.metrics: Dict[str, dict] = {}
+        self._lineage: List[tuple] = []
+
+    def __enter__(self) -> "StageWriter":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
@@ -64,28 +108,41 @@ class StageWriter:
         if not self.workdir:
             return df_thunk()
         path = self._path(stage)
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
+        fs, success = fs_and_path(self.spark, os.path.join(path, "_SUCCESS"))
+        if fs.exists(success):
             self.metrics[stage] = {"resumed": True}
             return self.spark.read.parquet(path)
         t0 = time.monotonic()
         df = df_thunk()
         df.write.mode("overwrite").parquet(path)
         wall = time.monotonic() - t0
-        out = self.spark.read.parquet(path)
-        self._record_lineage(stage, out, wall)
-        return out
-
-    def _record_lineage(self, stage: str, df: DataFrame, wall_s: float) -> None:
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count(F.lit(1)).alias("out_rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("wall_s", F.lit(float(wall_s)))
+        counts = _task_row_counts(self.spark, path)
+        self._lineage.extend(
+            (task, rows, stage, self.run_id, wall) for task, rows in sorted(counts.items())
         )
-        per_part.write.mode("append").parquet(os.path.join(self.workdir, "_lineage"))
-        total = per_part.agg(F.sum("out_rows")).collect()[0][0]
-        self.metrics[stage] = {"rows": int(total or 0), "wall_s": wall_s}
+        self.metrics[stage] = {"rows": sum(counts.values()), "wall_s": wall}
+        # the frame's own schema: no inference job over the footers
+        return self.spark.read.schema(df.schema).parquet(path)
+
+    def close(self) -> None:
+        """Append the buffered lineage rows to ``workdir/_lineage`` and
+        write ``workdir/metrics_<run_id>.json``. One append per run: each
+        append is a Spark job of its own."""
+        if not self.workdir:
+            return
+        if self._lineage:
+            self.spark.createDataFrame(self._lineage, _LINEAGE_SCHEMA).write.mode(
+                "append"
+            ).parquet(os.path.join(self.workdir, "_lineage"))
+            self._lineage = []
+        fs, p = fs_and_path(
+            self.spark, os.path.join(self.workdir, f"metrics_{self.run_id}.json")
+        )
+        out = fs.create(p, True)
+        try:
+            out.write(bytearray(json.dumps(self.metrics, indent=2, default=str), "utf-8"))
+        finally:
+            out.close()
 
 
 def run_pipeline(
@@ -98,38 +155,38 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     if cfg.shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-    w = StageWriter(spark, workdir, run_id)
-
     if cfg.chunking == "topic":
         chunk_fn = chunking.chunk_transcripts_topic
     elif cfg.chunking == "chars":
         chunk_fn = chunking.chunk_transcripts
     else:
         raise ValueError(f"unknown chunking strategy: {cfg.chunking!r}")
-    chunks = w.materialize("chunks", lambda: chunk_fn(transcripts, cfg))
 
-    def _extract() -> DataFrame:
-        t, _ = extraction.extract_stage(chunks, cfg)
-        return t
+    with StageWriter(spark, workdir, run_id) as w:
+        chunks = w.materialize("chunks", lambda: chunk_fn(transcripts, cfg))
 
-    triples = w.materialize("triples_raw", _extract)
-    if not workdir and cfg.deduplicate_nodes:
-        # lazy mode + dedup: canonicalization's iterative actions (CC
-        # fixpoint, GEMM stage) would re-run the extraction UDF once per
-        # job — pin the extraction output once (the workdir path gets
-        # the same break from its stage table)
-        triples = triples.localCheckpoint()
-    mentions = w.materialize(
-        "mentions", lambda: extraction.mentions_from_triples(triples)
-    )
-    if not workdir and cfg.deduplicate_nodes:
-        # same break for the mention table: the dedup tail evaluates it
-        # 2-4 times (canonicalize's node-vocabulary input + node_to_rep
-        # re-scan, build_nodes, structural rewrite), and each
-        # evaluation re-runs the endpoint explode + mention dedup
-        # exchange; one vocabulary-sized cache pays for all of them
-        mentions = mentions.localCheckpoint()
-    return assemble_graph(w, cfg, chunks, triples, mentions, transcripts)
+        def _extract() -> DataFrame:
+            t, _ = extraction.extract_stage(chunks, cfg)
+            return t
+
+        triples = w.materialize("triples_raw", _extract)
+        if not workdir and cfg.deduplicate_nodes:
+            # lazy mode + dedup: canonicalization's iterative actions (CC
+            # fixpoint, GEMM stage) would re-run the extraction UDF once per
+            # job — pin the extraction output once (the workdir path gets
+            # the same break from its stage table)
+            triples = triples.localCheckpoint()
+        mentions = w.materialize(
+            "mentions", lambda: extraction.mentions_from_triples(triples)
+        )
+        if not workdir and cfg.deduplicate_nodes:
+            # same break for the mention table: the dedup tail evaluates it
+            # 2-4 times (canonicalize's node-vocabulary input + node_to_rep
+            # re-scan, build_nodes, structural rewrite), and each
+            # evaluation re-runs the endpoint explode + mention dedup
+            # exchange; one vocabulary-sized cache pays for all of them
+            mentions = mentions.localCheckpoint()
+        return assemble_graph(w, cfg, chunks, triples, mentions, transcripts)
 
 
 def assemble_graph(
@@ -144,7 +201,8 @@ def assemble_graph(
     finalize (`streaming.ingest.finalize_graph`): linking, structural
     edges, optional SIMILAR KNN pass, optional canonicalization, node /
     edge materialization. ``transcripts`` is only needed for the
-    source_tools enrichment."""
+    source_tools enrichment. The caller closes ``w`` (it is a context
+    manager), which writes the run's lineage and metrics."""
     workdir = w.workdir
 
     def _link() -> DataFrame:
@@ -226,10 +284,6 @@ def assemble_graph(
     edges = w.materialize(
         "edges", lambda: materialize.build_edges(structural, triples, similar)
     )
-
-    if workdir:
-        with open(os.path.join(workdir, f"metrics_{w.run_id}.json"), "w") as f:
-            json.dump(w.metrics, f, indent=2, default=str)
 
     return PipelineResult(
         chunks=chunks,

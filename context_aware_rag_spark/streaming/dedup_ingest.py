@@ -30,14 +30,6 @@ from ..operators import dedup
 _HASH_SCHEMA = "doc_id long, text_hash string"
 
 
-def _epoch_ids(spark: SparkSession, base: str) -> list[int] | None:
-    """Moved to streaming/epochs.py (shared with canonical_ingest);
-    kept as a thin alias for this module's established surface."""
-    from .epochs import epoch_ids
-
-    return epoch_ids(spark, base)
-
-
 def _read_prior_index(
     spark: SparkSession,
     out_dir: str,

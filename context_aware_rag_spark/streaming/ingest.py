@@ -127,8 +127,8 @@ def finalize_graph(
     )
     if cfg.deduplicate_nodes and not workdir:
         triples = triples.localCheckpoint()  # see run_pipeline note
-    w = StageWriter(spark, workdir, run_id)
     # cfg.node_source_tools needs the raw transcripts (not a streaming
     # stage table) — callers pass the source table; assemble_graph
     # raises a clear ValueError if it's required but missing
-    return assemble_graph(w, cfg, chunks, triples, mentions, transcripts)
+    with StageWriter(spark, workdir, run_id) as w:
+        return assemble_graph(w, cfg, chunks, triples, mentions, transcripts)

@@ -21,8 +21,11 @@ Streaming shape for that:
   late_allowance / window_size × |roles|, independent of corpus size.
 
 At 100 TB-scale ingest this runs beside the triple-extraction stream
-(streaming/ingest.py) off the same source, giving per-window row
-counts that reconcile against the batch pipeline's _lineage metrics.
+(streaming/ingest.py) off the same source, giving per-window turn
+counts. They do not reconcile row for row with the batch pipeline's
+``_lineage`` table: that counts each stage's output rows (chunks,
+triples, ...) per write task, not input turns, and the watermark drops
+late turns from these windows.
 """
 
 from __future__ import annotations

@@ -48,6 +48,7 @@ def main(argv=None) -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from context_aware_rag_spark.deploy import ensure_on_executors
+    from context_aware_rag_spark.fsutil import fs_and_path
     from context_aware_rag_spark.operators import communities
     from context_aware_rag_spark.operators.graph import label_propagation
 
@@ -56,7 +57,8 @@ def main(argv=None) -> None:
     t0 = time.monotonic()
     # canonicalized triples when the ingest ran --dedup, raw otherwise
     tri_path = os.path.join(args.workdir, "triples")
-    if not os.path.exists(tri_path):
+    fs, tri = fs_and_path(spark, tri_path)
+    if not fs.exists(tri):
         tri_path = os.path.join(args.workdir, "triples_raw")
     triples = (
         spark.read.parquet(tri_path)
